@@ -201,6 +201,25 @@ class ValidationRun:
     result: ReconcileResult
     output: str | None
     log_path: str | None = None
+    # row count of each result list (missing_in_first, missing_in_second,
+    # differing), observed while the reports were written; None when no
+    # output was set
+    counts: dict[str, int] | None = None
+
+
+def _log_counts(log, db1: str, db2: str, counts: dict[str, int]) -> None:
+    log.info(f"IDs Missing in {db1}: {counts['missing_in_first']}")
+    log.info(f"IDs Missing in {db2}: {counts['missing_in_second']}")
+    log.info(f"Differing values: {counts['differing']}")
+
+
+def _counted(result: ReconcileResult) -> dict[str, int]:
+    """The three list counts, one count() job each."""
+    return {
+        "missing_in_first": result.missing_in_first.count(),
+        "missing_in_second": result.missing_in_second.count(),
+        "differing": result.differing.count(),
+    }
 
 
 def run_validation(spark: SparkSession, config: dict[str, Any]) -> ValidationRun:
@@ -214,7 +233,10 @@ def run_validation(spark: SparkSession, config: dict[str, Any]) -> ValidationRun
     redacted, validation phases, report writes. Stage lines do NOT
     force extra Spark jobs (the DAG stays lazy); set
     ``log_counts: true`` to also log the three result counts the
-    reference's eager pandas run printed (costs one extra job each).
+    reference's eager pandas run printed. With ``output`` set those
+    counts are observed while the summary is written (no extra job)
+    and also returned as ``ValidationRun.counts``; without it they
+    cost one ``count()`` job each.
     """
     from .observability import NullLogger, make_run_logger, redact
 
@@ -254,17 +276,21 @@ def run_validation(spark: SparkSession, config: dict[str, Any]) -> ValidationRun
         threshold=float(config.get("threshold", 1.0)),
     )
     log.info("Processing Validate Missing Ids Done.")
-    if config.get("log_counts"):
-        log.info(f"IDs Missing in {db1}: {result.missing_in_first.count()}")
-        log.info(f"IDs Missing in {db2}: {result.missing_in_second.count()}")
-        log.info(f"Differing values: {result.differing.count()}")
-    log.info("Processing Validate Data Done")
     output = config.get("output")
+    log_counts = bool(config.get("log_counts"))
+    if log_counts and not output:
+        _log_counts(log, db1, db2, _counted(result))
+    log.info("Processing Validate Data Done")
+    counts = None
     if output:
         log.info("saving result to csv file ........")
-        write_reports(result, output, single_file=bool(config.get("single_file", True)))
+        counts = write_reports(
+            result, output, single_file=bool(config.get("single_file", True))
+        )
         log.info(f"result saved under {output}")
-    return ValidationRun(result, output, getattr(log, "log_path", None))
+        if log_counts:
+            _log_counts(log, db1, db2, counts)
+    return ValidationRun(result, output, getattr(log, "log_path", None), counts)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -284,11 +310,11 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="validation_database_spark")
     run = run_validation(spark, config)
     r = run.result
-    n1 = r.missing_in_first.count()
-    n2 = r.missing_in_second.count()
-    nd = r.differing.count()
+    counts = run.counts or _counted(r)
     print(
-        f"missing in {r.db1}: {n1}; missing in {r.db2}: {n2}; differing: {nd}"
+        f"missing in {r.db1}: {counts['missing_in_first']}; "
+        f"missing in {r.db2}: {counts['missing_in_second']}; "
+        f"differing: {counts['differing']}"
         + (f"; reports under {run.output}" if run.output else "")
     )
     return 0

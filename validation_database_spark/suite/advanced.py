@@ -227,15 +227,13 @@ FROM orders GROUP BY o_orderstatus
 def q_sorted_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference sorts both frames by id before reporting
     (running_validation.py:636-637). Global sort made value-checkable
-    by materializing the rank — computed with the scalable two-pass
-    global_row_number (range partition + local rank + offsets), not a
-    single-partition window."""
+    by materializing the rank — computed with the sort-based
+    global_row_number (one range partition + sort, row positions plus
+    per-partition offsets), not a single-partition window."""
     from ..operators.report import global_row_number
 
     src_a, _ = validation_pair(spark, sf_dir, "string")
-    return global_row_number(src_a.select("id"), "id", rn_col="rank").withColumn(
-        "rank", F.col("rank").cast("bigint")
-    )
+    return global_row_number(src_a.select("id"), "id", rn_col="rank")
 
 
 ORACLE_SORTED_IDS = f"""
@@ -878,10 +876,10 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined back along the edges — linear in |E| with map-side combine,
     keys are the high-cardinality customer/part ids (no single-task
     window), hot parts are AQE-splittable. The final rank over the
-    part dimension is the two-pass distributed ``global_row_number``
-    (range-partition on (-auth2, p), local rank, tiny prefix offsets)
-    — no single-partition WindowExec even when the part dimension is
-    hundreds of millions of rows."""
+    part dimension is the sort-based distributed ``global_row_number``
+    (range-partition + sort on (-auth2, p), row positions plus tiny
+    per-partition offsets) — no WindowExec even when the part
+    dimension is hundreds of millions of rows."""
     from ..operators.report import global_row_number
 
     orders = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
@@ -902,7 +900,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("p").alias("partkey"),
         F.col("a1").cast("bigint").alias("auth1"),
         F.col("a2").cast("bigint").alias("auth2"),
-        F.col("__rn").cast("bigint").alias("auth_rank"),
+        F.col("__rn").alias("auth_rank"),
     )
 
 

@@ -71,9 +71,9 @@ def q_keys_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ops 9+10+14 in one driver-checked query over orders: the
     composite key with the NULL→'0' substitution, the reference's
     id/check/formatted_date select list, and the op-14 global sort
-    materialized as ``sort_rank`` — computed with the scalable
-    two-pass global_row_number (range partition + local rank +
-    offsets), never a single-partition window."""
+    materialized as ``sort_rank`` — computed with the sort-based
+    global_row_number (one range partition + sort, row positions plus
+    per-partition offsets), never a single-partition window."""
     from ..operators.report import global_row_number
 
     orders = load_table(spark, "orders", sf_dir)
@@ -87,9 +87,7 @@ def q_keys_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("check_col"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("formatted_date"),
     )
-    return global_row_number(projected, "id", rn_col="sort_rank").withColumn(
-        "sort_rank", F.col("sort_rank").cast("bigint")
-    )
+    return global_row_number(projected, "id", rn_col="sort_rank")
 
 
 ORACLE_KEYS_PROJECTION = """

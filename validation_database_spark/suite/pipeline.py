@@ -1231,7 +1231,7 @@ def q_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: counts are one map-side-combining groupBy; budget/quotas
     are a |langs|-row broadcast; selection ranks per language with the
-    two-pass distributed `grouped_row_number` — lang is a ~5-value
+    sort-based distributed `grouped_row_number` — lang is a ~5-value
     key, so the plain per-lang rank window would sort ~a fifth of the
     corpus on ONE reducer each; range-partitioning on (lang, md5 key)
     spreads every language across the cluster instead (the quota is

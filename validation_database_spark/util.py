@@ -23,11 +23,12 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
 
 # Persisted frames registered by operators that NEED the cache to
 # survive until the caller materializes the result — either for
-# partition-assignment determinism (the two-pass rank helpers in
+# partition-assignment determinism (the rank primitive in
 # operators/report.py) or because a reused/iterated subtree would
 # otherwise replicate in the plan (SemDeDup's Lloyd assignments).
 # Spark's CacheManager keys by logical plan and never GCs, so a long
-# session accumulates these without an explicit release; bench.py and
+# session accumulates these without an explicit release: an owner that
+# knows when its pin is done calls unpin(), and bench.py and
 # scripts/scale100.py call release_pins() between specs (ADVICE r6).
 _PINNED: list[DataFrame] = []
 
@@ -37,6 +38,12 @@ def pin(df: DataFrame) -> DataFrame:
     df.persist()
     _PINNED.append(df)
     return df
+
+
+def unpin(df: DataFrame) -> None:
+    """Unpersist one pinned frame and drop it from the registry."""
+    df.unpersist(False)
+    _PINNED[:] = [p for p in _PINNED if p is not df]
 
 
 def release_pins() -> None:
